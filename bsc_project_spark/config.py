@@ -103,8 +103,11 @@ class ExtractConfig:
     # heap, well inside a multi-GB driver and no bigger than the bins
     # broadcast the page join ships anyway.  assume_bounded_refs=True
     # (default) asserts the per-stage unique-ref count stays under that
-    # ceiling — true by construction when extraction runs per checkpoint
-    # bucket (pipeline/checkpoint.py bounds bucket size).  Set False to
+    # ceiling.  Nothing enforces it: a pipeline/checkpoint.py page bucket
+    # carries about (unique refs of the input) / n_page_buckets refs and
+    # an update's page delta its genuinely-new refs, so it holds only
+    # while the caller sizes n_page_buckets (and update batches) to keep
+    # that count under the ceiling.  Set False to
     # spend one skinny count() job per stage build: ref sets over the
     # ceiling then route through the fully-distributed planner
     # (assign_size_bins' two-phase range-rank + a shuffle-joined bins

@@ -3,32 +3,37 @@
 The north rule requires the job to be resumable from the last committed
 snapshot with per-partition lineage rows.  pyspark 4.1.2 in this sandbox
 ships no Iceberg runtime, so commits are emulated with identical semantics
-(documented fallback, SURVEY.md §7 step 5): a bucket becomes *committed*
+(documented fallback, SURVEY.md §7 step 5): a delta becomes *committed*
 only when the manifest JSON is atomically replaced (write-temp + rename,
 the same atomicity primitive an Iceberg snapshot commit relies on), and
-readers see only committed buckets.
+readers see only committed deltas.
 
-Two independently-resumable stages, because the unit of expensive work
-(a unique page) and the unit of output (a document) have different keys:
+Every commit is a delta, and each kind of delta has one writer:
 
-1. **Page stage** — the distinct media_refs of the whole input are
-   snapshotted once (``refs/``), hash-bucketed by media_ref, and each
-   bucket runs the image-kernel stage exactly once, committing
-   ``cells/pbucket=K`` + ``lineage/pbucket=K``.  A page referenced by
-   documents in ten different doc-buckets is still extracted ONCE
-   globally (the single-stage design re-extracted shared pages per
-   doc-bucket).
-2. **Doc stage** — documents are hash-bucketed by doc_id
-   (pmod(xxhash64(doc_id), n)); each bucket joins the committed cells,
-   restores span order with the per-doc window, and commits
-   ``data/bucket=K`` + ``errors/bucket=K`` (quarantined unresolved refs)
-   + ``doc_lineage/bucket=K`` (doc/span counts + wall time).
+- **Page delta** (``_write_page_delta``) — the image-kernel stage over a
+  set of unique media_refs, written as ``cells/<key>`` + ``lineage/<key>``
+  (an empty delta still writes one zero lineage row).
+- **Doc delta** (``_write_doc_delta``) — documents joined to the
+  committed cells with span order restored by the per-doc window, written
+  as ``data/<key>`` + ``errors/<key>`` (quarantined unresolved refs) + the
+  ``doc_ids/<key>`` ledger (partitioned by ``dbucket``) +
+  ``doc_lineage/<key>`` (doc/span counts + wall time).
 
-Resume = re-running the job: committed buckets of BOTH stages are skipped
+``run_extraction_job`` commits one page delta per page bucket
+(``pbucket=K``: the distinct media_refs of the whole input, snapshotted
+once under ``refs/`` and hash-bucketed by media_ref, so a page cited by
+documents in ten doc buckets is still extracted ONCE) and then one doc
+delta per doc bucket (``bucket=K``: pmod(xxhash64(doc_id), n)).
+``run_incremental_update`` commits one page delta over only the
+genuinely-new refs and one doc delta, both keyed ``update=U``, as a
+single snapshot.  All commits build their manifest state with
+``_table_state``, which carries every table-level key forward.
+
+Resume = re-running the job: committed buckets of BOTH kinds are skipped
 (the anti-join-against-committed-lineage idea of SURVEY.md Q12; with hash
 buckets the anti-join reduces to skipping bucket ids, zero recompute).
-A crash mid-page-stage resumes page extraction; a crash mid-doc-stage
-never re-runs any image kernel at all.
+A crash among the page deltas resumes page extraction; a crash among the
+doc deltas never re-runs any image kernel at all.
 
 Snapshot history is append-only: every commit freezes its manifest under
 ``snapshots/vN.json`` before atomically flipping the current pointer, so
@@ -43,16 +48,19 @@ scripts/ocr_generate_more_crops.py:11-18,69-76).
 
 from __future__ import annotations
 
+import copy
+import functools
 import json
 import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import ExtractConfig
 from .extract import (
+    LINEAGE_SCHEMA,
     assemble_spans,
     explode_spans,
     run_page_stage,
@@ -68,6 +76,19 @@ DOC_LINEAGE_SCHEMA = (
 # stream engine replays at most its last unacknowledged batches)
 _MAX_UPDATE_TAGS = 1024
 
+# every table-level key a snapshot carries, at its value for a table
+# with no commits
+_EMPTY_STATE = {
+    "run_id": None,
+    "committed_buckets": [],
+    "committed_page_buckets": [],
+    "n_buckets": None,
+    "n_page_buckets": None,
+    "committed_updates": [],
+    "update_tags": {},
+    "compaction": None,
+}
+
 
 def _manifest_path(out_dir: str) -> str:
     return os.path.join(out_dir, "_manifest.json")
@@ -75,6 +96,11 @@ def _manifest_path(out_dir: str) -> str:
 
 def _snapshots_dir(out_dir: str) -> str:
     return os.path.join(out_dir, "snapshots")
+
+
+def _load_manifest(path: str) -> dict:
+    with open(path) as f:
+        return {**copy.deepcopy(_EMPTY_STATE), **json.load(f)}
 
 
 def read_manifest(out_dir: str, as_of: int | None = None) -> dict:
@@ -85,23 +111,21 @@ def read_manifest(out_dir: str, as_of: int | None = None) -> dict:
         path = os.path.join(_snapshots_dir(out_dir), f"v{as_of}.json")
         if not os.path.exists(path):
             raise ValueError(f"no snapshot v{as_of} under {out_dir}")
-        with open(path) as f:
-            return json.load(f)
+        return _load_manifest(path)
     path = _manifest_path(out_dir)
     if not os.path.exists(path):
-        return {
-            "run_id": None,
-            "committed_buckets": [],
-            "committed_page_buckets": [],
-            "n_buckets": None,
-            "n_page_buckets": None,
-        }
-    with open(path) as f:
-        m = json.load(f)
-    m.setdefault("committed_page_buckets", [])
-    m.setdefault("n_page_buckets", None)
-    m.setdefault("committed_updates", [])
-    return m
+        return copy.deepcopy(_EMPTY_STATE)
+    return _load_manifest(path)
+
+
+def _table_state(base: dict, **changes) -> dict:
+    """State of a new snapshot: every table-level key carried forward from
+    the manifest ``base``, then ``changes`` applied.  Every commit builds
+    its state here, so no commit can drop a key another commit owns (the
+    committed updates, the idempotency ledger, an active compaction)."""
+    state = {k: copy.deepcopy(base[k]) for k in _EMPTY_STATE}
+    state.update(changes)
+    return state
 
 
 def _commit_manifest(out_dir: str, manifest: dict) -> dict:
@@ -135,11 +159,11 @@ def list_snapshots(out_dir: str) -> list[dict]:
     snaps = _snapshots_dir(out_dir)
     if not os.path.isdir(snaps):
         return []
-    out = []
-    for name in os.listdir(snaps):
-        if name.startswith("v") and name.endswith(".json"):
-            with open(os.path.join(snaps, name)) as f:
-                out.append(json.load(f))
+    out = [
+        _load_manifest(os.path.join(snaps, name))
+        for name in os.listdir(snaps)
+        if name.startswith("v") and name.endswith(".json")
+    ]
     return sorted(out, key=lambda m: m["snapshot_id"])
 
 
@@ -150,24 +174,109 @@ def rollback(out_dir: str, snapshot_id: int) -> dict:
     ``as_of``).  A subsequent ``run_extraction_job`` recomputes exactly the
     buckets the rollback un-committed — their stale data files are
     invisible until then (readers go through the manifest) and are
-    overwritten when recommitted."""
-    old = read_manifest(out_dir, as_of=snapshot_id)
-    state = {
-        k: old.get(k)
-        for k in (
-            "run_id",
-            "committed_buckets",
-            "committed_page_buckets",
-            "n_buckets",
-            "n_page_buckets",
-        )
-    }
-    state["committed_updates"] = old.get("committed_updates", [])
-    if old.get("compaction"):
-        state["compaction"] = old["compaction"]
-    state["rolled_back_from"] = read_manifest(out_dir).get("snapshot_id")
-    state["rolled_back_to"] = snapshot_id
-    return _commit_manifest(out_dir, state)
+    overwritten when recommitted.  The old state's idempotency ledger
+    comes back with it: a batch whose update was rolled back commits
+    again, a batch still committed stays a no-op."""
+    return _commit_manifest(
+        out_dir,
+        _table_state(
+            read_manifest(out_dir, as_of=snapshot_id),
+            rolled_back_from=read_manifest(out_dir).get("snapshot_id"),
+            rolled_back_to=snapshot_id,
+        ),
+    )
+
+
+def _doc_bucket(n_buckets: int) -> Column:
+    return F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets))
+
+
+def _write_doc_ids(docs: DataFrame, n_buckets: int, path: str) -> None:
+    """Committed-ids ledger: the distinct doc_ids of ``docs`` partitioned
+    by their doc bucket (``dbucket=K``), so an ingest anti-join reads only
+    the skinny ledger files of the buckets it touches (see
+    ``committed_doc_ids``)."""
+    (
+        docs.select("doc_id")
+        .distinct()
+        .withColumn("dbucket", _doc_bucket(n_buckets))
+        .write.mode("overwrite")
+        .partitionBy("dbucket")
+        .parquet(path)
+    )
+
+
+def _write_page_delta(
+    media: DataFrame,
+    refs: DataFrame,
+    cfg: ExtractConfig,
+    out_dir: str,
+    key: str,
+    run_id: str,
+    bucket: int,
+) -> None:
+    """Run the image-kernel stage over ``refs`` and write ``cells/<key>`` +
+    ``lineage/<key>`` (lineage rows tagged with ``run_id`` and ``bucket``).
+    The files stay invisible until the caller commits the manifest."""
+    spark = refs.sparkSession
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    # persist the raw stage so cells AND lineage consume one kernel run
+    # (deriving lineage from a second pass would re-run kernels)
+    stage = run_page_stage(media, refs, cfg, n_parts).persist()
+    cells, lineage = split_stage_output(stage)
+    cells.write.mode("overwrite").parquet(os.path.join(out_dir, f"cells/{key}"))
+    if lineage.limit(1).count() == 0:
+        # empty delta (no refs, or Spark skipped empty partitions): still
+        # write an explicit zero row so the lineage table covers every
+        # committed delta
+        lineage = spark.createDataFrame([(-1, 0, 0, 0, 0)], LINEAGE_SCHEMA)
+    (
+        lineage.withColumn("run_id", F.lit(run_id))
+        .withColumn("bucket", F.lit(bucket))
+        .withColumn("committed_at_ms", F.lit(int(time.time() * 1000)))
+        .write.mode("overwrite")
+        .parquet(os.path.join(out_dir, f"lineage/{key}"))
+    )
+    stage.unpersist()
+
+
+def _write_doc_delta(
+    docs: DataFrame,
+    cells: DataFrame,
+    media: DataFrame,
+    out_dir: str,
+    key: str,
+    run_id: str,
+    bucket: int,
+    n_buckets: int,
+) -> None:
+    """Assemble ``docs`` against the committed ``cells`` and write
+    ``data/<key>``, ``errors/<key>``, the ``doc_ids/<key>`` ledger and
+    ``doc_lineage/<key>``.  The files stay invisible until the caller
+    commits the manifest."""
+    spark = docs.sparkSession
+    t0 = time.monotonic()
+    extracted, unresolved = assemble_spans(docs, cells, media)
+    data_path = os.path.join(out_dir, f"data/{key}")
+    errors_path = os.path.join(out_dir, f"errors/{key}")
+    extracted.write.mode("overwrite").parquet(data_path)
+    unresolved.write.mode("overwrite").parquet(errors_path)
+    _write_doc_ids(docs, n_buckets, os.path.join(out_dir, f"doc_ids/{key}"))
+    stats = spark.read.parquet(data_path).agg(
+        F.countDistinct("doc_id").alias("docs"), F.count("*").alias("spans")
+    ).collect()[0]
+    n_unresolved = spark.read.parquet(errors_path).count()
+    doc_lineage = spark.createDataFrame(
+        [(bucket, int(stats.docs), int(stats.spans), int(n_unresolved),
+          int((time.monotonic() - t0) * 1000))],
+        DOC_LINEAGE_SCHEMA,
+    )
+    (
+        doc_lineage.withColumn("run_id", F.lit(run_id))
+        .withColumn("committed_at_ms", F.lit(int(time.time() * 1000)))
+        .write.mode("overwrite")
+        .parquet(os.path.join(out_dir, f"doc_lineage/{key}"))
+    )
 
 
 def run_extraction_job(
@@ -181,8 +290,9 @@ def run_extraction_job(
     fail_after_bucket: int | None = None,
     fail_after_page_bucket: int | None = None,
 ) -> dict:
-    """Run (or resume) the two-stage bucketed extraction job.  Returns the
-    manifest.
+    """Run (or resume) the bucketed extraction job: one page delta per
+    page bucket, then one doc delta per doc bucket, each its own snapshot.
+    Returns the manifest.
 
     ``fail_after_bucket`` / ``fail_after_page_bucket`` inject a crash after
     that bucket commits — test hooks for the kill/rerun resume tests
@@ -204,27 +314,23 @@ def run_extraction_job(
     run_id = manifest["run_id"] or run_id or uuid.uuid4().hex[:12]
     committed_pages = set(manifest["committed_page_buckets"])
     committed = set(manifest["committed_buckets"])
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     def commit() -> dict:
-        state = {
-            "run_id": run_id,
-            "committed_buckets": sorted(committed),
-            "committed_page_buckets": sorted(committed_pages),
-            "n_buckets": n_buckets,
-            "n_page_buckets": n_page_buckets,
-        }
-        # carry forward table-level state this job does not own (updates
-        # committed earlier, an active compaction) — a resumed bucket
-        # commit must not un-commit them
-        current = read_manifest(out_dir)
-        if current.get("committed_updates"):
-            state["committed_updates"] = current["committed_updates"]
-        if current.get("compaction"):
-            state["compaction"] = current["compaction"]
-        return _commit_manifest(out_dir, state)
+        # re-read the current manifest: a resumed bucket commit must not
+        # un-commit updates or a compaction made since this job started
+        return _commit_manifest(
+            out_dir,
+            _table_state(
+                read_manifest(out_dir),
+                run_id=run_id,
+                committed_buckets=sorted(committed),
+                committed_page_buckets=sorted(committed_pages),
+                n_buckets=n_buckets,
+                n_page_buckets=n_page_buckets,
+            ),
+        )
 
-    # ---- stage 1: pages (skipped entirely on a doc-stage-only resume) ----
+    # ---- page deltas (skipped entirely on a doc-stage-only resume) ----
     refs_dir = os.path.join(out_dir, "refs")
     if len(committed_pages) < n_page_buckets:
         if not os.path.exists(os.path.join(refs_dir, "_SUCCESS")):
@@ -243,74 +349,26 @@ def run_extraction_job(
         for pb in range(n_page_buckets):
             if pb in committed_pages:
                 continue
-            refs_b = refs_all.filter(pbucket_col == pb)
-            # persist the raw stage so cells AND lineage consume one kernel
-            # run (deriving lineage from a second pass would re-run kernels)
-            stage = run_page_stage(media, refs_b, cfg, n_parts).persist()
-            cells, lineage = split_stage_output(stage)
-            cells.write.mode("overwrite").parquet(
-                os.path.join(out_dir, f"cells/pbucket={pb}")
+            _write_page_delta(
+                media, refs_all.filter(pbucket_col == pb), cfg, out_dir,
+                f"pbucket={pb}", run_id, pb,
             )
-            if lineage.limit(1).count() == 0:
-                # empty page bucket (no refs hashed here, or Spark skipped
-                # empty partitions): still commit an explicit zero row so
-                # the lineage table covers every committed bucket
-                from .extract import LINEAGE_SCHEMA
-
-                lineage = spark.createDataFrame([(-1, 0, 0, 0, 0)], LINEAGE_SCHEMA)
-            (
-                lineage.withColumn("run_id", F.lit(run_id))
-                .withColumn("bucket", F.lit(pb))
-                .withColumn("committed_at_ms", F.lit(int(time.time() * 1000)))
-                .write.mode("overwrite")
-                .parquet(os.path.join(out_dir, f"lineage/pbucket={pb}"))
-            )
-            stage.unpersist()
             committed_pages.add(pb)
             manifest = commit()
             if fail_after_page_bucket is not None and pb >= fail_after_page_bucket:
                 raise RuntimeError(f"injected failure after page bucket {pb}")
 
-    # ---- stage 2: documents (joins committed cells; no kernel ever reruns) ----
+    # ---- doc deltas (join committed cells; no kernel ever reruns) ----
     cells_all = spark.read.parquet(
         *[os.path.join(out_dir, f"cells/pbucket={pb}") for pb in sorted(committed_pages)]
     )
-    bucket_col = F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets))
+    bucket_col = _doc_bucket(n_buckets)
     for bucket in range(n_buckets):
         if bucket in committed:
             continue
-        t0 = time.monotonic()
-        docs_b = documents.filter(bucket_col == bucket)
-        extracted, unresolved = assemble_spans(docs_b, cells_all, media)
-        extracted.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"data/bucket={bucket}")
-        )
-        unresolved.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"errors/bucket={bucket}")
-        )
-        # committed-ids ledger: one skinny (doc_id) file per bucket, so
-        # ingest idempotency anti-joins read O(touched buckets) of doc ids
-        # instead of scanning the full data table (see committed_doc_ids)
-        docs_b.select("doc_id").distinct().write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"doc_ids/bucket={bucket}")
-        )
-        written = spark.read.parquet(os.path.join(out_dir, f"data/bucket={bucket}"))
-        stats = written.agg(
-            F.countDistinct("doc_id").alias("docs"), F.count("*").alias("spans")
-        ).collect()[0]
-        n_unresolved = spark.read.parquet(
-            os.path.join(out_dir, f"errors/bucket={bucket}")
-        ).count()
-        doc_lineage = spark.createDataFrame(
-            [(bucket, int(stats.docs), int(stats.spans), int(n_unresolved),
-              int((time.monotonic() - t0) * 1000))],
-            DOC_LINEAGE_SCHEMA,
-        )
-        (
-            doc_lineage.withColumn("run_id", F.lit(run_id))
-            .withColumn("committed_at_ms", F.lit(int(time.time() * 1000)))
-            .write.mode("overwrite")
-            .parquet(os.path.join(out_dir, f"doc_lineage/bucket={bucket}"))
+        _write_doc_delta(
+            documents.filter(bucket_col == bucket), cells_all, media, out_dir,
+            f"bucket={bucket}", run_id, bucket, n_buckets,
         )
         committed.add(bucket)
         manifest = commit()
@@ -337,9 +395,9 @@ def run_incremental_update(
     its committed cells — no image kernel reruns, at any corpus size the
     kernel cost of an update is proportional to its genuinely-new pages.
 
-    One update = one snapshot commit: all delta files (cells, lineage,
-    data, errors, doc lineage under ``*/update=U``) are written first and
-    become visible only when the manifest commit appends U to
+    One update = one page delta + one doc delta under ``*/update=U``,
+    committed as one snapshot: the files are written first and become
+    visible only when the manifest commit appends U to
     ``committed_updates``.  A crash mid-update leaves the table at the
     previous snapshot; rerunning the same delta recomputes U's files
     idempotently (same id, overwrite mode) and commits once.
@@ -356,7 +414,7 @@ def run_incremental_update(
     """
     spark = new_documents.sparkSession
     manifest = read_manifest(out_dir)
-    update_tags: dict[str, int] = dict(manifest.get("update_tags", {}))
+    update_tags: dict[str, int] = manifest["update_tags"]
     if idempotency_key is not None and idempotency_key in update_tags:
         return manifest
     if manifest["run_id"] is None or len(manifest["committed_buckets"]) < (
@@ -365,92 +423,47 @@ def run_incremental_update(
         raise ValueError(
             f"{out_dir} has no fully-committed base run; run run_extraction_job first"
         )
-    committed_updates: list[int] = list(manifest.get("committed_updates", []))
+    committed_updates: list[int] = manifest["committed_updates"]
     uid = (committed_updates[-1] + 1) if committed_updates else 1
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    key = f"update={uid}"
 
     # refs already extracted: base snapshot + prior update deltas
     known_ref_paths = [os.path.join(out_dir, "refs")] + [
         os.path.join(out_dir, f"refs_updates/update={u}") for u in committed_updates
     ]
     known_refs = spark.read.parquet(*known_ref_paths)
-    delta_refs = (
+    delta_refs_path = os.path.join(out_dir, f"refs_updates/{key}")
+    (
         explode_spans(new_documents)
         .filter(F.col("kind") == "media")
         .select("media_ref")
         .distinct()
         .join(known_refs, on="media_ref", how="left_anti")
-    )
-    delta_refs.write.mode("overwrite").parquet(
-        os.path.join(out_dir, f"refs_updates/update={uid}")
-    )
-    delta_refs = spark.read.parquet(os.path.join(out_dir, f"refs_updates/update={uid}"))
-
-    # page stage over ONLY the genuinely-new pages
-    stage = run_page_stage(media, delta_refs, cfg, n_parts).persist()
-    cells, lineage = split_stage_output(stage)
-    cells.write.mode("overwrite").parquet(os.path.join(out_dir, f"cells/update={uid}"))
-    if lineage.limit(1).count() == 0:
-        from .extract import LINEAGE_SCHEMA
-
-        lineage = spark.createDataFrame([(-1, 0, 0, 0, 0)], LINEAGE_SCHEMA)
-    (
-        lineage.withColumn("run_id", F.lit(manifest["run_id"]))
-        .withColumn("bucket", F.lit(-uid))  # negative id marks update deltas
-        .withColumn("committed_at_ms", F.lit(int(time.time() * 1000)))
         .write.mode("overwrite")
-        .parquet(os.path.join(out_dir, f"lineage/update={uid}"))
+        .parquet(delta_refs_path)
     )
-    stage.unpersist()
 
-    # doc stage: join ALL committed cells (base + every update incl. this
+    # page delta over ONLY the genuinely-new pages; negative lineage
+    # bucket ids mark update deltas
+    _write_page_delta(
+        media, spark.read.parquet(delta_refs_path), cfg, out_dir, key,
+        manifest["run_id"], -uid,
+    )
+    # doc delta joins ALL committed cells (base + every update incl. this
     # one) so shared pages resolve without recompute
-    t0 = time.monotonic()
-    cell_paths = [
-        os.path.join(out_dir, f"cells/pbucket={pb}")
-        for pb in manifest["committed_page_buckets"]
-    ] + [
-        os.path.join(out_dir, f"cells/update={u}")
-        for u in [*committed_updates, uid]
-    ]
-    cells_all = spark.read.parquet(*cell_paths)
-    extracted, unresolved = assemble_spans(new_documents, cells_all, media)
-    extracted.write.mode("overwrite").parquet(
-        os.path.join(out_dir, f"data/update={uid}")
+    cells_all = spark.read.parquet(
+        *[
+            os.path.join(out_dir, f"cells/pbucket={pb}")
+            for pb in manifest["committed_page_buckets"]
+        ],
+        *[
+            os.path.join(out_dir, f"cells/update={u}")
+            for u in [*committed_updates, uid]
+        ],
     )
-    unresolved.write.mode("overwrite").parquet(
-        os.path.join(out_dir, f"errors/update={uid}")
-    )
-    # committed-ids ledger delta, partitioned by the SAME doc-id bucket
-    # function as the base run: a later batch's anti-join prunes every
-    # update delta to its touched dbucket=K directories
-    (
-        new_documents.select("doc_id")
-        .distinct()
-        .withColumn(
-            "dbucket", F.pmod(F.xxhash64("doc_id"), F.lit(manifest["n_buckets"]))
-        )
-        .write.mode("overwrite")
-        .partitionBy("dbucket")
-        .parquet(os.path.join(out_dir, f"doc_ids/update={uid}"))
-    )
-    written = spark.read.parquet(os.path.join(out_dir, f"data/update={uid}"))
-    stats = written.agg(
-        F.countDistinct("doc_id").alias("docs"), F.count("*").alias("spans")
-    ).collect()[0]
-    n_unresolved = spark.read.parquet(
-        os.path.join(out_dir, f"errors/update={uid}")
-    ).count()
-    doc_lineage = spark.createDataFrame(
-        [(-uid, int(stats.docs), int(stats.spans), int(n_unresolved),
-          int((time.monotonic() - t0) * 1000))],
-        DOC_LINEAGE_SCHEMA,
-    )
-    (
-        doc_lineage.withColumn("run_id", F.lit(manifest["run_id"]))
-        .withColumn("committed_at_ms", F.lit(int(time.time() * 1000)))
-        .write.mode("overwrite")
-        .parquet(os.path.join(out_dir, f"doc_lineage/update={uid}"))
+    _write_doc_delta(
+        new_documents, cells_all, media, out_dir, key, manifest["run_id"], -uid,
+        manifest["n_buckets"],
     )
 
     # single atomic commit makes the whole update visible
@@ -460,42 +473,41 @@ def run_incremental_update(
         # recent unacknowledged batches, so a long-lived continuous ingest
         # must not grow (and rewrite) one tag per batch forever
         if len(update_tags) > _MAX_UPDATE_TAGS:
-            keep = sorted(update_tags.values())[-_MAX_UPDATE_TAGS:]
-            floor = keep[0]
+            floor = sorted(update_tags.values())[-_MAX_UPDATE_TAGS]
             update_tags = {k: v for k, v in update_tags.items() if v >= floor}
-    state = {
-        "run_id": manifest["run_id"],
-        "committed_buckets": manifest["committed_buckets"],
-        "committed_page_buckets": manifest["committed_page_buckets"],
-        "n_buckets": manifest["n_buckets"],
-        "n_page_buckets": manifest["n_page_buckets"],
-        "committed_updates": [*committed_updates, uid],
-        "update_tags": update_tags,
-    }
-    if manifest.get("compaction"):
-        state["compaction"] = manifest["compaction"]
-    return _commit_manifest(out_dir, state)
+    return _commit_manifest(
+        out_dir,
+        _table_state(
+            manifest,
+            committed_updates=[*committed_updates, uid],
+            update_tags=update_tags,
+        ),
+    )
+
+
+def _live_deltas(manifest: dict) -> tuple[dict, list[int], list[int]]:
+    """A state's compaction ({} if none) and its committed buckets and
+    updates NOT covered by it — the doc deltas a reader of that state
+    reads."""
+    comp = manifest["compaction"] or {}
+    base = [
+        b for b in manifest["committed_buckets"] if b not in comp.get("buckets", [])
+    ]
+    updates = [
+        u for u in manifest["committed_updates"] if u not in comp.get("updates", [])
+    ]
+    return comp, base, updates
 
 
 def _data_paths(out_dir: str, manifest: dict) -> list[str]:
     """Doc-output dirs a manifest's state reads: the compacted dir (if the
     state has one) plus every bucket/update NOT covered by it."""
-    comp = manifest.get("compaction") or {}
-    covered_b = set(comp.get("buckets", []))
-    covered_u = set(comp.get("updates", []))
-    paths = []
-    if comp:
-        paths.append(os.path.join(out_dir, f"data/compacted={comp['id']}"))
-    paths += [
-        os.path.join(out_dir, f"data/bucket={b}")
-        for b in manifest["committed_buckets"]
-        if b not in covered_b
-    ] + [
-        os.path.join(out_dir, f"data/update={u}")
-        for u in manifest.get("committed_updates", [])
-        if u not in covered_u
-    ]
-    return paths
+    comp, base, updates = _live_deltas(manifest)
+    return (
+        ([os.path.join(out_dir, f"data/compacted={comp['id']}")] if comp else [])
+        + [os.path.join(out_dir, f"data/bucket={b}") for b in base]
+        + [os.path.join(out_dir, f"data/update={u}") for u in updates]
+    )
 
 
 def committed_doc_ids(
@@ -505,66 +517,41 @@ def committed_doc_ids(
     ``doc_ids/`` ledger instead of the data files.
 
     ``buckets`` prunes the scan to those doc-id buckets
-    (``pmod(xxhash64(doc_id), n_buckets)``): base ledger dirs are
-    selected by path, update-delta ledgers by their ``dbucket=K``
-    partition directories — so an ingest batch's idempotency anti-join
-    costs O(batch + touched buckets) however many snapshots the table
-    has accumulated, instead of rescanning the whole committed data set
-    every micro-batch.  Falls back to the data files for tables written
-    before the ledger existed."""
-    manifest = read_manifest(out_dir)
-    comp = manifest.get("compaction") or {}
-    covered_b = set(comp.get("buckets", []))
-    covered_u = set(comp.get("updates", []))
-    base = [b for b in manifest["committed_buckets"] if b not in covered_b]
-    updates = [
-        u for u in manifest.get("committed_updates", []) if u not in covered_u
+    (``pmod(xxhash64(doc_id), n_buckets)``).  Every ledger group (the
+    compacted dir, the base buckets, the update deltas) is partitioned by
+    ``dbucket=K`` and filtered on it, so the prune happens at
+    file-listing time; base bucket dirs are also selected by path (each
+    holds only its own dbucket), which keeps even the file listing to the
+    touched buckets.  An ingest batch's
+    idempotency anti-join thus costs O(batch + touched buckets) however
+    many snapshots the table has accumulated."""
+    comp, base, updates = _live_deltas(read_manifest(out_dir))
+    groups = [
+        [f"compacted={comp['id']}"] if comp else [],
+        [f"bucket={b}" for b in base if buckets is None or b in buckets],
+        [f"update={u}" for u in updates],
     ]
-    comp_path = (
-        os.path.join(out_dir, f"doc_ids/compacted={comp['id']}") if comp else None
-    )
-    if comp_path is not None and not os.path.exists(comp_path):
-        # compaction predates the ledger fold: its covered dirs still
-        # exist, read them directly
-        base = manifest["committed_buckets"]
-        updates = manifest.get("committed_updates", [])
-        comp_path = None
-    if buckets is not None:
-        wanted = set(buckets)
-        base = [b for b in base if b in wanted]
-    base_paths = [os.path.join(out_dir, f"doc_ids/bucket={b}") for b in base]
-    upd_paths = [os.path.join(out_dir, f"doc_ids/update={u}") for u in updates]
-    if any(not os.path.exists(p) for p in base_paths + upd_paths):
-        # pre-ledger table: the old (full-scan) behavior
-        return read_extracted(spark, out_dir).select("doc_id").distinct()
     # basePath anchors partition discovery at the ledger root (the
     # explicit path lists still gate visibility to committed dirs only);
     # without it Spark treats each bucket=K / update=U path as its own
-    # root and raises CONFLICTING_DIRECTORY_STRUCTURES
+    # root and raises CONFLICTING_DIRECTORY_STRUCTURES.  The schema is
+    # explicit because a delta with no documents writes no ledger file.
     root = os.path.join(out_dir, "doc_ids")
     frames = []
-    if comp_path is not None:
-        cdf = spark.read.option("basePath", root).parquet(comp_path)
-        if buckets is not None:
-            cdf = cdf.where(F.col("dbucket").isin([int(b) for b in buckets]))
-        frames.append(cdf.select("doc_id"))
-    if base_paths:
-        frames.append(
-            spark.read.option("basePath", root).parquet(*base_paths).select("doc_id")
+    for group in groups:
+        if not group:
+            continue
+        ids = (
+            spark.read.schema("doc_id string, dbucket int")
+            .option("basePath", root)
+            .parquet(*[os.path.join(root, g) for g in group])
         )
-    if upd_paths:
-        upd = spark.read.option("basePath", root).parquet(*upd_paths)
         if buckets is not None:
-            # dbucket is a partition-directory column: this filter prunes
-            # directories at file-listing time, no data files are opened
-            upd = upd.where(F.col("dbucket").isin([int(b) for b in buckets]))
-        frames.append(upd.select("doc_id"))
+            ids = ids.where(F.col("dbucket").isin([int(b) for b in buckets]))
+        frames.append(ids.select("doc_id"))
     if not frames:
         return spark.createDataFrame([], "doc_id string")
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out.distinct()
+    return functools.reduce(DataFrame.unionByName, frames).distinct()
 
 
 def read_extracted(
@@ -591,47 +578,28 @@ def compact(spark: SparkSession, out_dir: str, target_partitions: int = 1) -> di
     deleted — older snapshots still reference them; reclaim space with
     ``expire_snapshots``."""
     manifest = read_manifest(out_dir)
-    cid = int((manifest.get("compaction") or {}).get("id", 0)) + 1
+    cid = int((manifest["compaction"] or {}).get("id", 0)) + 1
     df = read_extracted(spark, out_dir)
     dest = os.path.join(out_dir, f"data/compacted={cid}")
     df.repartition(target_partitions).write.mode("overwrite").parquet(dest)
-    if manifest.get("n_buckets"):
-        # fold the committed-ids ledger too: without this a long-lived
-        # continuous-ingest table accretes one doc_ids/update=U dir per
-        # batch forever, and the ingest anti-join's touched-bucket scan
-        # grows with update count instead of staying one dir per bucket
-        (
-            df.select("doc_id")
-            .distinct()
-            .withColumn(
-                "dbucket",
-                F.pmod(F.xxhash64("doc_id"), F.lit(manifest["n_buckets"])),
-            )
-            .write.mode("overwrite")
-            .partitionBy("dbucket")
-            .parquet(os.path.join(out_dir, f"doc_ids/compacted={cid}"))
-        )
-    state = {
-        k: manifest.get(k)
-        for k in (
-            "run_id",
-            "committed_buckets",
-            "committed_page_buckets",
-            "n_buckets",
-            "n_page_buckets",
-            "committed_updates",
-        )
-    }
-    # the idempotency ledger must survive compaction, or a stream batch
-    # replayed after a compact would re-commit its delta
-    if manifest.get("update_tags"):
-        state["update_tags"] = manifest["update_tags"]
-    state["compaction"] = {
-        "id": cid,
-        "buckets": manifest["committed_buckets"],
-        "updates": manifest.get("committed_updates", []),
-    }
-    return _commit_manifest(out_dir, state)
+    # fold the committed-ids ledger too: without this a long-lived
+    # continuous-ingest table accretes one doc_ids/update=U dir per batch
+    # forever, and the ingest anti-join's touched-bucket scan grows with
+    # update count instead of staying one dir per bucket
+    _write_doc_ids(
+        df, manifest["n_buckets"], os.path.join(out_dir, f"doc_ids/compacted={cid}")
+    )
+    return _commit_manifest(
+        out_dir,
+        _table_state(
+            manifest,
+            compaction={
+                "id": cid,
+                "buckets": manifest["committed_buckets"],
+                "updates": manifest["committed_updates"],
+            },
+        ),
+    )
 
 
 def expire_snapshots(out_dir: str, keep_from: int) -> list[str]:
@@ -676,7 +644,7 @@ def read_lineage(
         for b in manifest["committed_page_buckets"]
     ] + [
         os.path.join(out_dir, f"lineage/update={u}")
-        for u in manifest.get("committed_updates", [])
+        for u in manifest["committed_updates"]
     ]
     if not paths:
         raise ValueError(f"no committed lineage under {out_dir}")
@@ -695,7 +663,7 @@ def read_doc_lineage(
         for b in manifest["committed_buckets"]
     ] + [
         os.path.join(out_dir, f"doc_lineage/update={u}")
-        for u in manifest.get("committed_updates", [])
+        for u in manifest["committed_updates"]
     ]
     if not paths:
         raise ValueError(f"no committed doc lineage under {out_dir}")

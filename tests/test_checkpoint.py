@@ -4,6 +4,7 @@ committed buckets not recomputed."""
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from bsc_project_spark.fixtures import spark_io
 from bsc_project_spark.fixtures.corpus import FIXTURE_CONFIG
@@ -174,8 +175,6 @@ def test_incremental_update_reuses_committed_pages(spark, corpus, tmp_path):
     pages are never re-run (kernel cost proportional to genuinely-new
     pages), the update commits atomically as one snapshot, and the final
     table equals one-shot extraction over the union."""
-    from pyspark.sql import functions as F
-
     from bsc_project_spark.fixtures.spark_io import DOCUMENTS_SCHEMA
     from bsc_project_spark.pipeline.checkpoint import (
         list_snapshots,
@@ -257,8 +256,6 @@ def test_compaction_and_snapshot_expiry(spark, corpus, tmp_path):
     """compact() folds all committed doc dirs into one, later updates
     append alongside it, pre-compaction snapshots stay readable until
     expire_snapshots garbage-collects exactly the unreferenced dirs."""
-    from pyspark.sql import functions as F
-
     from bsc_project_spark.fixtures.spark_io import DOCUMENTS_SCHEMA
     from bsc_project_spark.pipeline.checkpoint import (
         compact,
@@ -310,3 +307,89 @@ def test_compaction_and_snapshot_expiry(spark, corpus, tmp_path):
     # time travel older than the horizon is now (correctly) impossible
     with pytest.raises(ValueError, match="no snapshot"):
         read_manifest(out_dir, as_of=1)
+
+
+def test_empty_buckets_commit_zero_lineage_and_empty_ledgers(spark, corpus, tmp_path):
+    """More page buckets than unique pages and more doc buckets than
+    documents: every empty page delta still commits a zero lineage row,
+    every empty doc delta an empty ledger the committed-ids scan can
+    prune to, and the table equals one-shot extraction."""
+    from bsc_project_spark.pipeline.checkpoint import committed_doc_ids
+
+    docs = spark_io.documents_df(spark, corpus)
+    media = spark_io.media_df(spark, corpus)
+    out_dir = str(tmp_path / "job7")
+    n_pages, n_docs = len(corpus.media), len(corpus.documents)
+    n_page_buckets, n_buckets = n_pages + 2, n_docs + 2
+
+    run_extraction_job(
+        docs, media, FIXTURE_CONFIG, out_dir, n_buckets=n_buckets,
+        n_page_buckets=n_page_buckets,
+    )
+    rows = read_lineage(spark, out_dir).collect()
+    assert {r.bucket for r in rows} == set(range(n_page_buckets))
+    assert sum(r.page_count for r in rows) == n_pages
+    empty = set(range(n_page_buckets)) - {r.bucket for r in rows if r.page_count}
+    assert len(empty) >= n_page_buckets - n_pages
+
+    final = read_extracted(spark, out_dir)
+    oneshot = extract_spans(docs, media, FIXTURE_CONFIG)
+    assert final.exceptAll(oneshot).count() == 0
+    assert oneshot.exceptAll(final).count() == 0
+
+    # the ledger answers per doc bucket, empty buckets included
+    ids = {r.doc_id: r.b for r in docs.select(
+        "doc_id", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)).alias("b")
+    ).collect()}
+    assert {r.doc_id for r in committed_doc_ids(spark, out_dir).collect()} == set(ids)
+    for b in range(n_buckets):
+        got = {r.doc_id for r in committed_doc_ids(spark, out_dir, [b]).collect()}
+        assert got == {d for d, db in ids.items() if db == b}, b
+
+
+def test_rollback_restores_the_idempotency_ledger(spark, corpus, tmp_path):
+    """rollback() brings back the old state's idempotency ledger with its
+    updates: replaying a batch still committed at that state is a no-op,
+    and a batch whose update was rolled back commits again."""
+    from bsc_project_spark.pipeline.checkpoint import (
+        list_snapshots,
+        rollback,
+        run_incremental_update,
+    )
+
+    docs = spark_io.documents_df(spark, corpus)
+    media = spark_io.media_df(spark, corpus)
+    ids = sorted(r.doc_id for r in docs.select("doc_id").collect())
+    base, batch0, batch1 = (
+        docs.filter(F.col("doc_id").isin(part))
+        for part in (ids[:2], ids[2:3], ids[3:])
+    )
+    out_dir = str(tmp_path / "job8")
+    run_extraction_job(base, media, FIXTURE_CONFIG, out_dir, n_buckets=2)
+    m1 = run_incremental_update(
+        batch0, media, FIXTURE_CONFIG, out_dir, idempotency_key="batch-0"
+    )
+    run_incremental_update(
+        batch1, media, FIXTURE_CONFIG, out_dir, idempotency_key="batch-1"
+    )
+
+    rb = rollback(out_dir, m1["snapshot_id"])
+    assert rb["committed_updates"] == [1]
+    assert rb["update_tags"] == {"batch-0": 1}
+    n_snaps = len(list_snapshots(out_dir))
+
+    run_incremental_update(
+        batch0, media, FIXTURE_CONFIG, out_dir, idempotency_key="batch-0"
+    )
+    assert len(list_snapshots(out_dir)) == n_snaps
+
+    m = run_incremental_update(
+        batch1, media, FIXTURE_CONFIG, out_dir, idempotency_key="batch-1"
+    )
+    assert m["committed_updates"] == [1, 2]
+    assert len(list_snapshots(out_dir)) == n_snaps + 1
+
+    # every document exactly once
+    got = read_extracted(spark, out_dir)
+    assert {r.doc_id for r in got.select("doc_id").distinct().collect()} == set(ids)
+    assert got.groupBy("doc_id", "order").count().where("count > 1").count() == 0
